@@ -21,4 +21,11 @@ ingestion platform implies — Spark-first:
 - ``plans``        explain()-based plan assertions (pushdown, broadcast)
 """
 
+from ._archive_guard import install_archive_guard as _install_archive_guard
+
 __version__ = "0.1.0"
+
+# Reused Python workers import this package when they unpickle any engine
+# function or the kafka_sim reader, so from then on their per-task
+# invalidate_caches() skips unchanged archives (module note there).
+_install_archive_guard()

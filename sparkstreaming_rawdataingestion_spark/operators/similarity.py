@@ -97,7 +97,12 @@ def rp_bands(col: str) -> Column:
     """Array of LSH_BANDS (band_idx, bucket) structs for the vector in
     column ``col``: bucket = the band's LSH_BITS sign bits packed into an
     int. One JVM-parsed expression string (module note on
-    _dot_literal_sql)."""
+    _dot_literal_sql), so ``col`` must be a column NAME: a ``Column``
+    would be spliced into the SQL text as its repr."""
+    if not isinstance(col, str):
+        raise TypeError(
+            f"rp_bands expects a column name (str), got {type(col).__name__}"
+        )
     bits = [
         f"(CASE WHEN {_dot_literal_sql(col, HYPERPLANES[p])} >= 0"
         f" THEN 1 ELSE 0 END)"

@@ -287,10 +287,14 @@ def _operator_registries(attr: str) -> dict:
 
     registry: dict = {}
     for mod in _QUERY_MODULES:
+        name = f"{__package__}.{mod}"
         try:
-            m = importlib.import_module(f"{__package__}.{mod}")
-        except ImportError:
-            continue
+            m = importlib.import_module(name)
+        except ImportError as e:
+            # a broken module would otherwise drop its queries silently
+            raise ImportError(
+                f"operator module {name} failed to import: {e}"
+            ) from e
         registry.update(getattr(m, attr, {}))
     return registry
 

@@ -96,9 +96,9 @@ def kafka_sim_value_stream(
         # raise its ValueError, not be silently dropped to "unlimited".
         reader = reader.option("maxRecordsPerBatch", str(max_records_per_batch))
     if group_id is not None:
-        # The `kafka.group.id` analogue: scopes the broker-side pacing
-        # base so concurrent capped queries over one log dir don't share
-        # a _consumer_offsets sidecar (see kafka_sim module docstring).
+        # The `kafka.group.id` analogue. Like the real source, the sim
+        # keeps offsets and pacing in the checkpoint, so the group scopes
+        # nothing (see kafka_sim module docstring).
         reader = reader.option("groupId", group_id)
     return reader.load().select(F.col("value").cast("string").alias("value"))
 

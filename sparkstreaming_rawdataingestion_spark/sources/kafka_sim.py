@@ -35,10 +35,11 @@ executable and tested:
   ``tests/test_kafka_sim.py``);
 - per-partition ``maxRecordsPerBatch`` backpressure — the stand-in for the
   real source's ``maxOffsetsPerTrigger`` replay-bounding knob. Its pacing
-  base survives restarts via a broker-side ``_consumer_offsets/<groupId>``
-  sidecar (the analogue of Kafka's ``__consumer_offsets`` topic); give
-  concurrent capped queries over one log dir distinct ``groupId`` options,
-  exactly as distinct Kafka consumers need distinct ``group.id``s.
+  base is the last range the engine announced to this reader, so it needs
+  no state outside the checkpoint: a restarted query resumes one cap past
+  its committed frontier, and a fresh query paces from its own start. The
+  ``groupId`` option (Kafka's ``group.id``) is accepted and scopes nothing,
+  like the real source, which also keeps its offsets in the checkpoint.
 
 Log layout: ``<path>/<topic>/p<partition>.jsonl``; line N of a file is the
 record at offset N (offset IS the line number, like a Kafka segment's
@@ -473,54 +474,20 @@ class KafkaSimStreamReader(DataSourceStreamReader):
             raise ValueError(
                 f"maxRecordsPerBatch must be a positive int, got {cap!r}"
             )
-        self._group = options.get("groupId", "default")
         # Rate-limit base (NOT correctness state — the engine owns
-        # committed offsets in its checkpoint). A fresh reader must not
-        # start the base at 0: after a clean restart the engine's FIRST
-        # call is latestOffset(), and an end below the checkpointed
-        # frontier moves the stream backwards and redelivers records. So
-        # the base is persisted broker-side at planning time, keyed by
-        # consumer group — the same place real Kafka keeps group offsets
-        # (__consumer_offsets). Planning-time persistence makes the base
-        # monotonically ≥ every end the engine can ever have committed;
-        # a base above an uncommitted replayed range is harmless (the
-        # engine passes that range explicitly to partitions()).
-        self._planned: dict[str, int] = self._load_group_offsets()
-        self._saved: dict[str, int] = dict(self._planned)
-
-    def _group_offsets_file(self) -> str:
-        return os.path.join(
-            self._path, "_consumer_offsets", f"{self._group}.json"
-        )
-
-    def _load_group_offsets(self) -> dict[str, int]:
-        try:
-            with open(self._group_offsets_file(), encoding="utf-8") as f:
-                raw = json.load(f)
-            return {str(k): int(v) for k, v in raw.items()}
-        except (OSError, ValueError):
-            return {}
-
-    def _save_group_offsets(self) -> None:
-        if self._planned == self._saved:
-            return  # idle polling stream: no frontier change, no I/O
-        try:
-            fpath = self._group_offsets_file()
-            os.makedirs(os.path.dirname(fpath), exist_ok=True)
-            tmp = fpath + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(self._planned, f)
-            os.replace(tmp, fpath)
-            self._saved = dict(self._planned)
-        except OSError:
-            # Uncapped streams never consult the base, so a read-only
-            # log dir must not kill a stream that never needed to write
-            # before this feature. A CAPPED stream's base IS load-bearing
-            # across restarts (a lost sidecar ⇒ base 0 ⇒ ends planned
-            # below the committed frontier ⇒ redelivery), so there the
-            # write failure stays loud.
-            if self._cap is not None:
-                raise
+        # committed offsets in its checkpoint): the end of the last range
+        # the engine announced through latestOffset(), initialOffset() or
+        # partitions(). On restart the engine hands the reader its
+        # committed range through partitions() before it first asks for
+        # latestOffset(), so the base resumes at the checkpointed
+        # frontier. A fresh query's first call is latestOffset(), which
+        # paces from startingOffsets. Keep the base out of any file: one
+        # saved at planning time is ahead of the offset log when a stop
+        # falls between the two (the restarted first batch would carry
+        # two caps), and any saved frontier is stale for a later fresh
+        # query on the same log (its first batch would span the backlog
+        # uncapped).
+        self._planned: dict[str, int] = {}
 
     def initialOffset(self) -> dict:
         # Consulted only on a FRESH checkpoint (the engine owns offsets
@@ -534,20 +501,7 @@ class KafkaSimStreamReader(DataSourceStreamReader):
         initial = _resolve_offsets_option(
             self._options.get("startingOffsets", "earliest"), counts, -2
         )
-        # initialOffset fires ONLY for fresh queries, so it RESETS the
-        # pacing base to this query's own start — in both directions.
-        # Up: a capped 'latest' stream basing at 0 would plan an end
-        # below its start and walk backwards. Down: a stale sidecar from
-        # an earlier query over the same group would otherwise put the
-        # base at the OLD frontier, letting a fresh capped query's first
-        # batch span the whole backlog uncapped — the unbounded-replay
-        # batch the knob exists to prevent. (The group sidecar serves
-        # RESTARTS, which never call initialOffset. A capped query
-        # running concurrently on the same group sees its base yanked by
-        # this reset — same-group concurrency is documented-unsupported,
-        # exactly as in Kafka.)
         self._planned = dict(initial)
-        self._save_group_offsets()
         return initial
 
     def latestOffset(self) -> dict:
@@ -555,18 +509,16 @@ class KafkaSimStreamReader(DataSourceStreamReader):
             f"{t}:{p}": _count_records(f)
             for t, p, f in _selected_files(self._path, self._selection)
         }
-        # First contact with a partition (no sidecar entry): the pacing
+        # First contact with a partition (no base yet): the pacing
         # base starts at the RESOLVED startingOffsets position, not 0.
         # The engine calls latestOffset before initialOffset on a fresh
-        # query (availableNow single-batch capture), so a capped
-        # 'latest'/JSON stream that based at 0 would capture an end
-        # BELOW its own start and checkpoint a frontier behind it —
-        # redelivering the skipped backlog on restart. Partitions
-        # already in the sidecar keep their frontier (restarts pace
-        # forward from it); partitions appearing mid-stream still
-        # DELIVER from 0 — the engine passes their true range to
-        # partitions() — matching the real connector, where
-        # startingOffsets applies only at query start.
+        # query, so a capped 'latest'/JSON stream that based at 0 would
+        # capture an end BELOW its own start and checkpoint a frontier
+        # behind it — redelivering the skipped backlog on restart.
+        # Partitions appearing mid-stream still DELIVER from 0 — the
+        # engine passes their true range to partitions() — matching the
+        # real connector, where startingOffsets applies only at query
+        # start.
         missing = [tp for tp in latest if tp not in self._planned]
         if missing:
             floor = _resolve_offsets_option(
@@ -584,9 +536,6 @@ class KafkaSimStreamReader(DataSourceStreamReader):
                 # more than `cap` new records per partition per batch
                 latest[tp] = max(base, min(hi, base + self._cap))
         self._planned = dict(latest)
-        # Persisted even when uncapped, so a LATER capped restart of the
-        # same group starts its pacing base at the true frontier.
-        self._save_group_offsets()
         return latest
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
@@ -599,10 +548,10 @@ class KafkaSimStreamReader(DataSourceStreamReader):
         )
         out = []
         for tp, hi in end.items():
-            # After a crash the engine replans the uncommitted batch from
-            # the checkpoint: keep the rate-limit base at least at the
-            # recovered range's END so subsequent latestOffset() calls
-            # extend from the true frontier.
+            # On restart the engine announces its committed range (and
+            # replans an uncommitted batch) here before planning anew:
+            # keep the rate-limit base at least at the range's END so
+            # subsequent latestOffset() calls extend from the frontier.
             lo = start.get(tp, 0)
             if self._planned.get(tp, 0) < hi:
                 self._planned[tp] = hi

@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
+
 REPO = os.path.join(os.path.dirname(__file__), "..")
 
 
@@ -60,3 +62,17 @@ def test_coverage_extended_count_matches_registry():
     assert f"{n_ext} extended)" in text, (
         f"COVERAGE.md extended count is stale: registry has {n_ext}"
     )
+
+
+def test_broken_operator_module_fails_loudly(monkeypatch):
+    """A module that fails to import must raise, naming the module, not
+    silently drop its queries from the registry."""
+    from sparkstreaming_rawdataingestion_spark import queries
+
+    monkeypatch.setattr(
+        queries,
+        "_QUERY_MODULES",
+        (*queries._QUERY_MODULES, "operators.no_such_module"),
+    )
+    with pytest.raises(ImportError, match=r"operators\.no_such_module"):
+        queries._operator_registries("QUERIES")

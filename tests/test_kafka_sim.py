@@ -337,11 +337,12 @@ def test_strict_log_name_filtering(spark, tmp_path):
 def test_capped_restart_resumes_at_frontier_not_zero(spark, tmp_path):
     """The round's restart-redelivery fix: an uncapped drain commits
     frontier 6 to the checkpoint; a LATER capped restart constructs a
-    fresh reader whose pacing base must come from the broker-side
-    ``_consumer_offsets`` sidecar (6), not 0 — otherwise latestOffset
-    plans an end BELOW the committed frontier and the stream moves
-    backwards. Assert the capped run delivers only new records, within
-    the cap, and a final uncapped run drains the remainder exactly once."""
+    fresh reader whose pacing base must be the committed frontier (6),
+    which the engine hands it through partitions(), not 0 — otherwise
+    latestOffset plans an end BELOW the committed frontier and the
+    stream moves backwards. Assert the capped run delivers only new
+    records, within the cap, and a final uncapped run drains the
+    remainder exactly once."""
     log = str(tmp_path / "log")
     ckpt = str(tmp_path / "ckpt")
     kafka_sim.produce(log, "hr-stream", [f"m-{i}" for i in range(6)], 0)
@@ -354,7 +355,7 @@ def test_capped_restart_resumes_at_frontier_not_zero(spark, tmp_path):
     second: list[str] = []
     sizes = _drain_stream(spark, log, "hr-stream", ckpt, second, cap=2)
     # availableNow freezes the target at the first latestOffset: base 6
-    # (from the sidecar) + cap 2 = 8 → exactly the first two new records,
+    # (the committed frontier) + cap 2 = 8 → exactly the first two new records,
     # no redelivery of m-*, never a batch above the cap.
     assert second == ["n-0", "n-1"]
     assert all(s <= 2 for s in sizes)
@@ -378,9 +379,9 @@ def test_count_cache_sees_appends(tmp_path):
 
 def test_distinct_groups_pace_independently(spark, tmp_path):
     """Two capped consumers with distinct groupIds over ONE log dir keep
-    separate broker-side pacing bases — consumer B starts from offset 0
-    even after consumer A has drained ahead (shared-group behavior would
-    hand B a base at A's frontier and skip the early records)."""
+    separate pacing bases — consumer B starts from offset 0 even after
+    consumer A has drained ahead (a base shared through the log dir
+    would hand B A's frontier and skip the early records)."""
 
     def drain(group, ckpt, cap):
         got: list[str] = []
@@ -717,8 +718,8 @@ def test_min_partitions_splits_ranges(spark, tmp_path):
 
 def test_review_regressions_round6_session(spark, tmp_path):
     """Pins for the session's review findings: duplicate subscribe
-    topics read once (batch == stream), a stale group sidecar cannot
-    disable the cap for a FRESH query, batch rejects the grammar the
+    topics read once (batch == stream), an earlier query's frontier
+    cannot disable the cap for a FRESH query, batch rejects the grammar the
     real connector rejects, and malformed offset/assign shapes all get
     the friendly grammar error."""
     import time
@@ -737,10 +738,10 @@ def test_review_regressions_round6_session(spark, tmp_path):
     )
     assert len(dup) == 6
 
-    # 2) stale sidecar: an earlier (uncapped) query leaves frontier 6 in
-    # the default group's sidecar; a FRESH capped polling query must
-    # still pace 2-at-a-time from ITS start (earliest), not deliver the
-    # whole backlog in one batch
+    # 2) an earlier (uncapped) query on the same log and default group
+    # reached frontier 6; a FRESH capped polling query must still pace
+    # 2-at-a-time from ITS start (earliest), not deliver the whole
+    # backlog in one batch
     first: list[str] = []
     _drain_stream(spark, log, "hr-stream", str(tmp_path / "ckpt-a"), first)
     assert len(first) == 6

@@ -9,6 +9,7 @@ reference and asserts bitwise-equal results on the sf0.001 fixture.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkstreaming_rawdataingestion_spark import catalog
@@ -110,6 +111,14 @@ def test_rp_bands_match_column_form(spark, sf_dir):
         "vec_id", F.explode(similarity.rp_bands("v")).alias("bb")
     ).select("vec_id", "bb.band", "bb.bucket")
     assert _rows(got) == _rows(ref)
+
+
+def test_rp_bands_rejects_column_argument(spark):
+    """rp_bands splices its argument into SQL text, so a Column must fail
+    with a clear TypeError rather than an opaque parse error later."""
+    for bad in (F.col("v"), None, 3):
+        with pytest.raises(TypeError, match="column name"):
+            similarity.rp_bands(bad)
 
 
 def test_lsh_portable_signature_matches_column_form(spark, sf_dir):
